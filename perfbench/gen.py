@@ -6,8 +6,7 @@ with the column names, types and value domains of the engine's test data,
 so every registered query and its DuckDB oracle run unchanged. The same
 seed gives byte-identical tables.
 
-Usage: python3 gen.py <out_dir> --seed N [--sf 0.001] [--events 20000]
-                      [--docs 500] [--vectors 500]
+Usage: python3 gen.py <out_dir> --seed N [--events 20000]
 """
 import argparse
 import json
@@ -32,6 +31,10 @@ DAY_US = 86_400_000_000
 EPOCH_1995 = 788_918_400_000_000   # 1995-01-01 in microseconds
 EPOCH_2024 = 1_704_067_200_000_000  # 2024-01-01 in microseconds
 TS = pa.timestamp("us")
+SF = 0.001
+# The oracle SQL of the auto-geometry keys is written for a 500-row corpus.
+DOCS = 500
+VECTORS = 500
 
 
 def write(out, name, cols):
@@ -42,11 +45,11 @@ def money(rng, lo, hi, n):
     return np.round(rng.uniform(lo, hi, n), 2)
 
 
-def tpch(out, rng, sf):
-    n_cust = max(30, int(150_000 * sf))
-    n_supp = max(5, int(10_000 * sf))
-    n_part = max(40, int(200_000 * sf))
-    n_ord = max(300, int(1_500_000 * sf))
+def tpch(out, rng):
+    n_cust = max(30, int(150_000 * SF))
+    n_supp = max(5, int(10_000 * SF))
+    n_part = max(40, int(200_000 * SF))
+    n_ord = max(300, int(1_500_000 * SF))
     write(out, "region", {"r_regionkey": pa.array(range(5), pa.int32()),
                           "r_name": REGIONS})
     write(out, "nation", {"n_nationkey": pa.array(range(25), pa.int32()),
@@ -137,27 +140,24 @@ def embeddings(out, rng, n, dim=64):
         "label": pa.array(rng.integers(0, 10, n), pa.int32())})
 
 
-def generate(out, seed, sf=0.001, n_events=20_000, n_docs=500, n_vectors=500):
+def generate(out, seed, n_events=20_000):
     os.makedirs(out, exist_ok=True)
-    # one independent stream per table: changing one table's size leaves
-    # the others' contents unchanged
+    # one independent stream per table: changing the event count leaves
+    # the other tables' contents unchanged
     rngs = [np.random.default_rng([seed, i]) for i in range(4)]
-    tpch(out, rngs[0], sf)
+    tpch(out, rngs[0])
     events(out, rngs[1], n_events)
-    documents(out, rngs[2], n_docs)
-    embeddings(out, rngs[3], n_vectors)
+    documents(out, rngs[2], DOCS)
+    embeddings(out, rngs[3], VECTORS)
 
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("out")
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--sf", type=float, default=0.001)
     ap.add_argument("--events", type=int, default=20_000)
-    ap.add_argument("--docs", type=int, default=500)
-    ap.add_argument("--vectors", type=int, default=500)
     a = ap.parse_args()
-    generate(a.out, a.seed, a.sf, a.events, a.docs, a.vectors)
+    generate(a.out, a.seed, a.events)
 
 
 if __name__ == "__main__":

@@ -9,7 +9,7 @@ import graft.SparkEntry
 /** The batch workloads: each registered query of the workload's key set,
   * one at a time, closed loop — construct it (`SparkEntry.queries(k)`),
   * then execute it through the noop sink, the way `graft.Bench` does.
-  * The untimed warm-up pass writes each output as parquet instead, for the
+  * The first untimed warm-up pass writes each output as parquet instead, for the
   * DuckDB oracle check run.py makes after the run.
   */
 object Batch {
@@ -69,7 +69,7 @@ object Batch {
       if (traced) tracer.foreach(_.attach())
       val cpu0 = Cpu.processSeconds
       val t0 = Clock.nowUs
-      val execs = order.map(k => execOnce(k, verify = index < 0))
+      val execs = order.map(k => execOnce(k, verify = index == -1))
       val t1 = Clock.nowUs
       val cpu = Cpu.processSeconds - cpu0
       if (traced) tracer.foreach(_.detach(execs.size.toLong))
@@ -89,14 +89,18 @@ object Batch {
     val coldS = (System.nanoTime() - coldT0) / 1e9 + builds.map(_._2).sum
     Json.writeFile(new java.io.File(verifyDir, "oracle_sql.json"), keys.filter(oracle.contains)
       .filterNot(k => failures.exists(_.startsWith(s"$k: "))).map(k => k -> oracle(k)).toMap)
+    // two more untimed passes through the noop sink, so that the heaviest
+    // JIT compilation is done before the timed passes
+    Seq(-2, -3).foreach(i => runPass(i, traced = false, None))
 
     val tracer = if (a.trace) Some(new Tracer(spark)) else None
     val passes = ArrayBuffer.empty[PassRec]
     val timedT0 = System.nanoTime()
     def elapsed = (System.nanoTime() - timedT0) / 1e9
-    // whole passes only; in the traced run passes alternate untraced/traced
-    // so the difference of their medians is the tracing overhead
-    val minPasses = if (a.trace) 6 else 4
+    // whole passes only, at least six; in the traced run passes alternate
+    // untraced/traced so the difference of their medians is the tracing
+    // overhead
+    val minPasses = 6
     var lastWall = 0.0
     while (passes.size < minPasses || elapsed + lastWall <= a.seconds) {
       val p = runPass(passes.size, traced = a.trace && passes.size % 2 == 1, tracer)
@@ -132,11 +136,13 @@ object Cpu {
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
   private val jit = java.lang.management.ManagementFactory.getCompilationMXBean
 
-  /** Process CPU seconds less the time the JIT compilers spent: what the
-    * work itself cost, without the warm-up compilation that still runs in
-    * the first timed passes.
+  /** The process's CPU seconds, every thread included (JIT compilers, GC). */
+  def processSeconds: Double = os.getProcessCpuTime / 1e9
+
+  /** Seconds the JIT compilers have spent since the JVM started, summed
+    * over the compiler threads.
     */
-  def processSeconds: Double = os.getProcessCpuTime / 1e9 - jit.getTotalCompilationTime / 1e3
+  def jitSeconds: Double = jit.getTotalCompilationTime / 1e3
 }
 
 object Du {

@@ -53,8 +53,7 @@ object Layers {
       "exec.gc_s" -> stages.map(_.gcMs).sum / 1000.0,
       "exec.slot_busy" -> (if (wallS > 0) runS / (Args.Cores * wallS) else 0.0),
       "exec.shuffle_read_mb" -> stages.map(_.shuffleReadBytes).sum / MB,
-      "exec.shuffle_write_mb" -> stages.map(_.shuffleWriteBytes).sum / MB,
-      "exec.spill_mb" -> stages.map(_.spillBytes).sum / MB)
+      "exec.shuffle_write_mb" -> stages.map(_.shuffleWriteBytes).sum / MB)
   }
 
   /** (key, task run seconds, wall seconds) of every traced query. */
@@ -137,16 +136,14 @@ object Layers {
         s"$m.query_planning_ms" -> med("queryPlanning"),
         s"$m.wal_commit_ms" -> med("walCommit"),
         s"$m.commit_offsets_ms" -> med("commitOffsets"),
-        s"$m.latest_offset_ms" -> med("latestOffset"),
         s"$m.state_rows" -> last.map(_.stateOperators.map(_.numRowsTotal).sum.toDouble).getOrElse(0.0),
         s"$m.state_mb" -> last.map(_.stateOperators.map(_.memoryUsedBytes).sum / MB).getOrElse(0.0),
-        s"$m.state_commit_ms" -> Stats.median(ps.map(_.stateOperators.map(_.commitTimeMs).sum.toDouble)),
-        s"$m.late_dropped" -> all.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum.toDouble)
+        s"$m.state_commit_ms" -> Stats.median(ps.map(_.stateOperators.map(_.commitTimeMs).sum.toDouble)))
     }.toMap
     val roots = traced.map(r => Span(r.span, 0, r.queryName, "stream", r.op, r.startUs, r.endUs))
     val lo = traced.map(_.startUs).min
     val hi = traced.map(_.endUs).max
-    val late = traced.flatMap(r => r.due.zip(r.appended).map { case (d, x) => (x - d) / 1000.0 })
+    val late = traced.flatMap(_.feedLateMs)
     val gen = Map(
       "gen.late_p99_ms" -> Stats.quantile(late, 0.99),
       "gen.appends" -> traced.map(_.fixedAppends).sum.toDouble,

@@ -41,7 +41,7 @@ object Metrics {
 
   val PerLayer: Seq[(String, String)] =
     Seq("engine.session_s" -> "s", "engine.table_touch_s" -> "s", "jvm.peak_rss_mb" -> "MB",
-      "cold_pass_s" -> "s") ++
+      "jvm.jit_s" -> "s", "cold_pass_s" -> "s") ++
       Seq("operators", "functions").flatMap(g =>
         Seq(s"$g.construct_s" -> "s", s"$g.construct_jobs" -> "count")) ++
       StoreFamilies.map(f => s"functions.stores.$f.build_s" -> "s") ++
@@ -50,12 +50,11 @@ object Metrics {
       Seq("exec.jobs" -> "count", "exec.stages" -> "count", "exec.tasks" -> "count",
         "exec.driver_gap_s" -> "s", "exec.task_run_s" -> "s", "exec.task_cpu_s" -> "s",
         "exec.gc_s" -> "s", "exec.slot_busy" -> "ratio", "exec.shuffle_read_mb" -> "MB",
-        "exec.shuffle_write_mb" -> "MB", "exec.spill_mb" -> "MB") ++
+        "exec.shuffle_write_mb" -> "MB") ++
       Stream.OpNames.flatMap { op =>
         Seq("batches" -> "count", "trigger_p50_ms" -> "ms", "add_batch_ms" -> "ms",
           "query_planning_ms" -> "ms", "wal_commit_ms" -> "ms", "commit_offsets_ms" -> "ms",
-          "latest_offset_ms" -> "ms", "state_rows" -> "count", "state_mb" -> "MB",
-          "state_commit_ms" -> "ms", "late_dropped" -> "count")
+          "state_rows" -> "count", "state_mb" -> "MB", "state_commit_ms" -> "ms")
           .map { case (n, u) => s"streaming.$op.$n" -> u }
       } ++
       Seq("gen.late_p99_ms" -> "ms", "gen.appends" -> "count", "gen.backlog_rows" -> "count",
@@ -75,8 +74,14 @@ object Metrics {
   * `spans.json`) into the run directory; run.py prints the final line.
   */
 object Main {
-  def main(argv: Array[String]): Unit = {
-    val a = Args.parse(argv)
+  /** A workload's outcome with the end-to-end and per-layer values the
+    * run prints.
+    */
+  final case class Run(out: Outcome, setup: Setup.Timing, e2e: Map[String, Double],
+                       layers: Map[String, Double])
+
+  /** Sets up the workload's session, runs the workload on it and stops it. */
+  def execute(a: Args): Run = {
     val w = Workloads(a.workload)
     val (spark, setup) = Setup.run(a)
     val out =
@@ -87,7 +92,13 @@ object Main {
     val e2e = out.e2e - "cold_pass_s" + ("setup_s" -> setup.medianS)
     val layers = out.layers ++ Map("engine.session_s" -> setup.sessionS,
       "engine.table_touch_s" -> setup.touchS, "jvm.peak_rss_mb" -> Rss.peakMb,
-      "cold_pass_s" -> out.e2e("cold_pass_s"))
+      "jvm.jit_s" -> Cpu.jitSeconds, "cold_pass_s" -> out.e2e("cold_pass_s"))
+    Run(out, setup, e2e, layers)
+  }
+
+  def main(argv: Array[String]): Unit = {
+    val a = Args.parse(argv)
+    val Run(out, setup, e2e, layers) = execute(a)
     val metrics =
       if (a.trace) Metrics.render(Metrics.PerLayer, layers)
       else Metrics.render(Metrics.EndToEnd, e2e)

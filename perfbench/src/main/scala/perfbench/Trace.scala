@@ -95,8 +95,7 @@ final class Tracer(spark: SparkSession) {
         i.stageId, Option(stageJob.get(i.stageId)).map(_.intValue).getOrElse(-1),
         i.submissionTime.getOrElse(0L) * 1000L, i.completionTime.getOrElse(0L) * 1000L,
         i.numTasks, m.executorRunTime, m.executorCpuTime, m.jvmGCTime,
-        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-        m.memoryBytesSpilled + m.diskBytesSpilled))
+        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
     }
   }
 
@@ -148,8 +147,7 @@ object Tracer {
   final case class JobRec(jobId: Int, span: Long, startUs: Long, endUs: Long)
   final case class StageRec(stageId: Int, jobId: Int, startUs: Long, endUs: Long,
                             tasks: Int, runMs: Long, cpuNs: Long, gcMs: Long,
-                            shuffleReadBytes: Long, shuffleWriteBytes: Long,
-                            spillBytes: Long)
+                            shuffleReadBytes: Long, shuffleWriteBytes: Long)
   final case class PhaseRec(name: String, startUs: Long, endUs: Long)
 
   /** Runs `f` with jobs it starts on this thread tagged with `span`. */

@@ -78,7 +78,7 @@ object Keys {
 )
 
   /** Keys covered by neither timed set. A run is kept to about a minute
-    * (setup, store builds, a warm-up pass and at least four timed passes);
+    * (setup, store builds, three warm-up passes and at least six timed passes);
     * these run only in the engine's own gate.
     */
   val Untimed: Seq[String] = Seq(

@@ -2,15 +2,15 @@ package perfbench
 
 import java.nio.file.Files
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
 
 /** The benchmark's own checks, on a tiny generated input (TPC-H sf0.001,
-  * 2000 events).
+  * 2000 events). Each workload runs as the benchmark runs it: on the
+  * session its setup builds, traced, with zero measured seconds.
   */
-class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BenchSpec extends AnyFunSuite {
 
   private lazy val work = Files.createTempDirectory(new java.io.File("target").toPath, "bench-spec").toFile
   private lazy val data = {
@@ -24,12 +24,10 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     Args(workload, seed = 7, seconds = 0, trace = true, data = data,
       work = new java.io.File(work, workload).getPath)
 
-  private lazy val session = Setup.run(args("batch"))._1
-  private lazy val batch = Batch.run(session,
-    Workload("batch", Seq("fizzbuzz", "q1_pricing", "window_join", "json_props"), Nil), args("batch"))
-  private lazy val stream = Stream.run(session, args("stream"))
-
-  override def afterAll(): Unit = session.stop()
+  private lazy val batchRun = Main.execute(args("batch"))
+  private lazy val streamRun = Main.execute(args("stream"))
+  private def batch = batchRun.out
+  private def stream = streamRun.out
 
   test("the timed sets, the untimed set and the gate-only set partition the registry") {
     val lists = Seq(Keys.OpsTimed, Keys.CorpusTimed, Keys.Untimed, Keys.GateOnly)
@@ -42,20 +40,15 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Keys.CorpusTimed.exists(Keys.operatorFamily))
   }
 
-  test("every metric is printed by name with a unit") {
-    for ((spec, values) <- Seq(
-      Metrics.EndToEnd -> (batch.e2e - "cold_pass_s" + ("setup_s" -> 1.0)),
-      Metrics.PerLayer -> batch.layers, Metrics.PerLayer -> stream.layers)) {
-      val out = Metrics.render(spec, values)
-      assert(out.keySet == spec.map(_._1).toSet)
-      out.values.foreach { v =>
-        val m = v.asInstanceOf[Map[String, Any]]
-        assert(m("unit").toString.nonEmpty)
-        assert(m("value").isInstanceOf[Double])
-      }
-    }
-    assert(Metrics.EndToEnd.map(_._1).toSet == batch.e2e.keySet - "cold_pass_s" + "setup_s")
-    assert(stream.e2e.keySet == batch.e2e.keySet)
+  test("every metric is measured by a workload and printed with a unit") {
+    val names = (spec: Seq[(String, String)]) => spec.map(_._1).toSet
+    for (run <- Seq(batchRun, streamRun))
+      assert(run.e2e.keySet == names(Metrics.EndToEnd))
+    val measured = batchRun.layers.keySet ++ streamRun.layers.keySet
+    val spec = names(Metrics.PerLayer)
+    assert((measured -- spec).isEmpty, s"measured, not in the spec: ${measured -- spec}")
+    assert((spec -- measured).isEmpty, s"in the spec, never measured: ${spec -- measured}")
+    assert(Metrics.EndToEnd.forall(_._2.nonEmpty) && Metrics.PerLayer.forall(_._2.nonEmpty))
   }
 
   test("per query, traced task run time is at most cores x wall") {
@@ -78,11 +71,11 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stream.spans.exists(_.layer == "phase"))
   }
 
-  test("batch and stream runs are correct and nothing is dropped as late") {
+  test("batch and stream runs are correct, with no row dropped as late") {
+    // Stream.run fails an operator whose progress reports a late drop
     assert(batch.failed == 0, batch.detail)
     assert(stream.failed == 0, stream.detail)
     assert(stream.wrong.isEmpty)
-    Stream.OpNames.foreach(op => assert(stream.layers(s"streaming.$op.late_dropped") == 0.0))
   }
 
   test("self time subtracts the union of child intervals") {
